@@ -6,7 +6,7 @@ reference ORC writer's output), plus decode + bit-identity verify, plus a few
 relational queries over the driver testdata to track Catalyst-path perf.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on).
 Scaling-efficiency evidence between two "cluster sizes" (local[N] vs local[4N])
 is produced by scripts/scaling_bench.py → BENCH.md, not here.
 """
@@ -25,14 +25,14 @@ ROWS_PER_SF = 5_000_000  # sf0.1 -> 500k rows (~330M tokens, ~1.3 GB raw)
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sf = float(os.path.basename(os.path.normpath(sf_dir)).replace("sf", "") or 0.1)
-    n_rows = max(1000, int(ROWS_PER_SF * sf))
-
     from clj_orc_spark.datagen import write_token_table
     from clj_orc_spark.pipeline import decode, encode, size_gate, verify_digest
-    from clj_orc_spark.session import get_spark
+    from clj_orc_spark.session import default_cpus, get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = default_cpus()
+    sf = float(os.path.basename(os.path.normpath(sf_dir)).replace("sf", "") or 0.1)
+    n_rows = max(1000, int(ROWS_PER_SF * sf))
 
     import __spark_entry__ as entry_mod
 

@@ -9,7 +9,10 @@ the record instead of silently poisoning a single sample.
 
 Usage::
 
-    python bench_extra.py [--rows 500000] [--reps 3] [--cpus 32]
+    python bench_extra.py [--rows 500000] [--reps 3] [--cpus N]
+
+``--cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else the CPUs this process
+may run on.
 
 Prints one JSON line: per-phase lists of rep walls + medians + loadavg.
 """
@@ -32,11 +35,12 @@ def _loadavg() -> float:
 
 
 def main() -> None:
+    from clj_orc_spark.session import default_cpus
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=500_000)
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cpus())
     args = ap.parse_args()
 
     from clj_orc_spark.datagen import write_token_table

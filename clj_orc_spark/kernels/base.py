@@ -164,18 +164,27 @@ def _ref_u64(ref: int) -> np.uint64:
     return np.uint64(int(ref) & 0xFFFFFFFFFFFFFFFF)
 
 
+def _readonly_view(a: np.ndarray) -> np.ndarray:
+    """A read-only view of ``a``: the zero-reference residuals alias the
+    caller's column, so a write through them must raise, not corrupt it."""
+    v = a.view()
+    v.flags.writeable = False
+    return v
+
+
 def as_unsigned_residuals(arr: np.ndarray, ref: int) -> np.ndarray:
     """``(arr - ref) mod 2**64`` as uint64 — exact for any 64-bit range.
 
     Wraparound subtraction keeps frame-of-reference exact even when
     ``max - min`` overflows int64 (full-range int64 or uint64 columns).
+    A zero ``ref`` returns a read-only view of ``arr``, not a copy.
     """
     if arr.dtype == np.uint64:
         a = arr
     else:
         a = arr.astype(np.int64, copy=False).view(np.uint64)
     if ref == 0:
-        return a  # view, no copy — every caller treats residuals read-only
+        return _readonly_view(a)
     return a - _ref_u64(ref)  # uint64 wraps mod 2**64
 
 
@@ -188,14 +197,15 @@ def narrow_residuals(arr: np.ndarray, ref: int) -> np.ndarray:
     the true residual of a ≤32-bit column always fits 32 bits), uint64
     otherwise.  The int32 token-column hot path does half the memory
     traffic this way; every downstream op (mask/compare/shift/pack) yields
-    byte-identical payloads, pinned by tests/test_kernels.py."""
+    byte-identical payloads, pinned by tests/test_kernels.py.  A zero
+    ``ref`` returns a read-only view, as in :func:`as_unsigned_residuals`."""
     if arr.dtype in _NARROW_DTYPES:
         if arr.dtype == np.uint32:
             a = arr
         else:
             a = arr.astype(np.int32, copy=False).view(np.uint32)
         if ref == 0:
-            return a  # view, no copy — residuals are read-only downstream
+            return _readonly_view(a)
         return a - np.uint32(int(ref) & 0xFFFFFFFF)
     return as_unsigned_residuals(arr, ref)
 

@@ -230,9 +230,12 @@ def _fold_bitlen(value_counts: np.ndarray, full: int) -> np.ndarray:
         value_counts,
     )
     # entries above ``full`` are zero by construction (full covers the max
-    # actual value); the assert catches an inconsistent caller histogram
-    # before it could silently change a width decision
-    assert int(hist[full + 1:].sum()) == 0, "value_counts exceed 2^full"
+    # actual value); a nonzero one means an inconsistent caller histogram,
+    # which must fail loudly before it could silently change a width decision
+    if int(hist[full + 1:].sum()):
+        raise ValueError(
+            f"value_counts hold values of more than {full} bits"
+        )
     return hist[: full + 1]
 
 

@@ -20,6 +20,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from ..kernels import crc32, decode_any
+from ..session import arrow_frame
 from . import fsio, pafs
 from .encode import (
     DEFAULT_SCHEMA,
@@ -875,7 +876,7 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     from .encode import _has_parquet
 
     if not _has_parquet(spark, chunks_dir):  # empty run wrote no chunks
-        return spark.createDataFrame([], ddl)
+        return arrow_frame(spark, [], ddl)
 
     if mode == "shuffle":
         chunks = spark.read.parquet(chunks_dir)
@@ -912,7 +913,7 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
             files = _chunk_files(chunks_dir, part_ids)
         work_rows = [(f, None) for f in files]
     if not work_rows:
-        return spark.createDataFrame([], ddl)
+        return arrow_frame(spark, [], ddl)
 
     phys = _physical_map(schema)
     needed_cols = sorted({p for c in (columns or order) for p in phys[c]})
@@ -932,12 +933,9 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     decode_files = make_files_decoder(columns, schema, needed_cols,
                                       prune_cols, prefetch=prefetch)
 
-    # each task receives its OWN file path as data — a closure over the full
+    # each task receives its OWN file paths as data — a closure over the full
     # file list would ship every task a copy of all paths (millions at 100 TB)
-    work = spark.createDataFrame(
-        spark.sparkContext.parallelize(work_rows, len(work_rows)),
-        "path string, cids string",
-    )
+    work = arrow_frame(spark, work_rows, "path string, cids string")
     return exact_filter(work.mapInArrow(decode_files, ddl))
 
 

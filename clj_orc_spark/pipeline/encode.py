@@ -49,6 +49,7 @@ import pyarrow.compute as pc
 
 from ..kernels import StringCol, crc32
 from ..selector import encode_column
+from ..session import arrow_frame
 from . import fsio, pafs
 from .skew import apply_plan, compute_plan
 
@@ -84,6 +85,12 @@ OUT_DDL = (
     "chunk_id long, seq int, col string, codec string, meta string, "
     "payload binary, n_rows int, raw_bytes long, enc_bytes long, crc long, "
     "selection string, stats string, part_id int"
+)
+
+#: one ``manifest/parts`` completion marker per committed part
+PARTS_DDL = (
+    "part_id int, n_chunks long, n_rows long, enc_bytes long,"
+    " raw_bytes long, status string, completed_at double"
 )
 
 #: physical columns of one encoded chunk; ``offsets`` is the int64 index that
@@ -999,14 +1006,16 @@ def rowgroup_work_df(spark, parts: list[list[list]], pending: list[int]):
     Each task's row-group assignment travels as DATA, not as a function
     closure — a closure over the full plan would ship EVERY task a pickled
     copy of ALL assignments (at 10^12 scale: ~10^6 row-group units ≈ 100 MB
-    per task).  ``parallelize(rows, len(rows))`` puts exactly one row in
-    each slice, keeping task→partition 1:1.  (Past ~10^6 parts the plan
-    belongs in a parquet sidecar rather than plan.json.)"""
+    per task).  The frame is built by :func:`arrow_frame`: with up to
+    ``defaultParallelism`` rows each task gets one partition; past it each
+    task encodes a contiguous run of partitions, one after the other.
+    Fewer Python tasks means fewer fixed worker costs, and no repartition
+    is added (the encode stays shuffle-free).  A task's chunk rows for all
+    its parts pass through the ``partitionBy("part_id")`` write's local
+    sort together.  (Past ~10^6 parts the plan belongs in a parquet
+    sidecar rather than plan.json.)"""
     rows = [(int(p), json.dumps(parts[p])) for p in pending]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, len(rows)),
-        "pid int, units string",
-    )
+    return arrow_frame(spark, rows, "pid int, units string")
 
 
 def _row_weight_csum(tbl: pa.Table, schema) -> np.ndarray:
@@ -1092,9 +1101,11 @@ def make_rowgroup_encoder(chunk_bytes: int, fs=None, policy: str = "size",
                           schema=DEFAULT_SCHEMA, sort_by=None):
     """ONE-stage scan+encode for ``mapInArrow`` over :func:`rowgroup_work_df`.
 
-    Each task owns one ``part_id`` (a planned bin of row groups): it reads
-    its row groups with pyarrow, feeds them straight into the byte-budget
-    chunk encoder, and emits encoded chunk rows — zero shuffle, zero
+    Each input row is one ``part_id`` (a planned bin of row groups), and a
+    task encodes its contiguous run of them one after the other (see
+    :func:`rowgroup_work_df`): it reads each bin's row groups with pyarrow,
+    feeds them straight into the byte-budget chunk encoder, and emits
+    encoded chunk rows in ``part_id`` order — zero shuffle, zero
     JVM-row materialization of token bytes.  This is the 100 TB default
     (measured: the salted-repartition path moves every token byte through
     shuffle write+read, which caps single-box scaling and is network-bound
@@ -1201,13 +1212,11 @@ def make_rowgroup_encoder(chunk_bytes: int, fs=None, policy: str = "size",
 
 
 def scan_work_df(spark, assignments: list[list[tuple[str, int]]]):
-    """One row per scan task: ``(tid, units_json)`` — assignments travel as
-    data, not closure (same reasoning as :func:`rowgroup_work_df`)."""
+    """One row per assignment: ``(tid, units_json)`` — assignments travel as
+    data, not closure, and past ``defaultParallelism`` rows a task scans a
+    contiguous run of them (same reasoning as :func:`rowgroup_work_df`)."""
     rows = [(i, json.dumps(a)) for i, a in enumerate(assignments)]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, len(rows)),
-        "tid int, units string",
-    )
+    return arrow_frame(spark, rows, "tid int, units string")
 
 
 def make_arrow_scanner(plan: dict, pending: set[int] | None, fs=None):
@@ -1527,11 +1536,7 @@ def _commit_manifest(spark, out_dir: str, chunks_dir: str,
             int(r["raw_bytes"] or 0) if r else 0,
             "complete", now,
         ))
-    parts = spark.createDataFrame(
-        rows,
-        "part_id int, n_chunks long, n_rows long, enc_bytes long,"
-        " raw_bytes long, status string, completed_at double",
-    )
+    parts = arrow_frame(spark, rows, PARTS_DDL)
     _write_per_part(parts, os.path.join(out_dir, "manifest", "parts"))
 
 
@@ -1663,8 +1668,10 @@ def encode(
 
     if plan is not None or (scan_files and scan in ("auto", "rowgroup")):
         if not explicit_parts:
-            # part == task in this mode: keep every core busy even when the
-            # byte-based default would under-split a small input
+            # two LPT-packed bins per core even when the byte-based
+            # default would under-split a small input; the work frame gives
+            # min(parts, defaultParallelism) tasks, each a contiguous run of
+            # bins, so with this floor a task usually encodes two or more parts
             n_partitions = max(
                 n_partitions, spark.sparkContext.defaultParallelism * 2
             )
@@ -1797,10 +1804,9 @@ def encode(
 
     if not _has_parquet(spark, chunks_dir):
         # zero rows pending (empty input): mark parts complete, no chunks
-        parts = spark.createDataFrame(
-            [(p, 0, 0, 0, 0, "complete", time.time()) for p in pending],
-            "part_id int, n_chunks long, n_rows long, enc_bytes long,"
-            " raw_bytes long, status string, completed_at double",
+        parts = arrow_frame(
+            spark, [(p, 0, 0, 0, 0, "complete", time.time()) for p in pending],
+            PARTS_DDL,
         )
         _write_per_part(parts, os.path.join(out_dir, "manifest", "parts"))
         return {"n_partitions": n_total, "pending": len(pending),

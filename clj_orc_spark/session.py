@@ -10,9 +10,49 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 ARROW_BATCH_ROWS = 4096  # rows per Arrow batch crossing the JVM↔Python boundary
+
+
+def arrow_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """DataFrame of driver-side ``rows`` typed by ``ddl``, built from a
+    ``pyarrow.Table`` so no Python task runs to produce it.
+
+    ``createDataFrame(parallelize(rows))`` or ``createDataFrame(list)``
+    would run PySpark's row-conversion map as a Python RDD, so each task
+    over the frame pays a SECOND Python-worker round before its
+    ``mapInArrow`` — about 0.2 s of worker CPU per task on PySpark 4.1
+    (every task re-reads ``pyspark.zip``'s central directory per cached
+    importer).
+
+    Below ``spark.sql.execution.arrow.localRelationThreshold`` the table
+    plans as a JVM ``LocalTableScan`` with ``min(len(rows),
+    defaultParallelism)`` partitions, each a contiguous run of rows.  Above
+    it Spark reads the table as a JVM RDD with one partition per Arrow
+    batch, so the table is cut into that many contiguous batches here too;
+    a batch longer than ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    is split further, which only adds partitions."""
+    struct = StructType.fromDDL(ddl)
+    schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+    n = len(rows)
+    k = min(n, spark.sparkContext.defaultParallelism)
+    if k > 1:  # the same contiguous cut LocalTableScan makes
+        bounds = [i * n // k for i in range(k + 1)]
+        table = pa.Table.from_batches(
+            [b for lo, hi in zip(bounds, bounds[1:])
+             for b in table.slice(lo, hi - lo).to_batches()],
+            schema=schema,
+        )
+    return spark.createDataFrame(table, struct)
 
 
 def _local_dir() -> str:
@@ -58,10 +98,15 @@ def package_zip() -> str:
     return zpath
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(master: str | None = None, app_name: str = "clj-orc-spark") -> SparkSession:
+    """The engine's session; ``master=None`` means ``local[default_cpus()]``."""
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cpus()}]"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

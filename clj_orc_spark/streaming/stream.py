@@ -27,6 +27,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import arrow_frame
+
 
 def _source_log_files(spark, checkpoint: str, batch_id: int) -> list[str]:
     """File paths the FileStreamSource assigned to ``batch_id``, from its
@@ -130,11 +132,8 @@ def stream_decode(
         sess = batch_df.sparkSession
         files = _source_log_files(sess, checkpoint, batch_id)
         if files:
-            work = sess.createDataFrame(
-                sess.sparkContext.parallelize(
-                    [(f, None) for f in files], len(files)
-                ),
-                "path string, cids string",
+            work = arrow_frame(
+                sess, [(f, None) for f in files], "path string, cids string"
             )
             decoded = work.mapInArrow(decoder, ddl)
         else:

@@ -328,3 +328,32 @@ def test_patched_for_value_counts_identical_payload():
         assert m_vc == m_plain, name
         out = PatchedFor.decode(p_vc, m_vc)
         assert np.array_equal(out, arr), name
+
+
+def test_fold_bitlen_rejects_inconsistent_histogram():
+    """A value histogram holding a value wider than ``full`` bits must
+    raise, under ``python -O`` too, instead of folding to a wrong width."""
+    from clj_orc_spark.kernels.bitpack import _bitlen_hist, _fold_bitlen
+
+    vals = np.array([0, 1, 3, 3, 2], dtype=np.uint32)
+    vc = np.bincount(vals).astype(np.int64)
+    assert np.array_equal(_fold_bitlen(vc, 2), _bitlen_hist(vals, 2))
+    bad = np.zeros(9, dtype=np.int64)
+    bad[8] = 1  # value 8 needs 4 bits, the caller claims 2
+    with pytest.raises(ValueError, match="more than 2 bits"):
+        _fold_bitlen(bad, 2)
+
+
+@pytest.mark.parametrize("dtype", ["int64", "uint64", "int32", "uint32"])
+def test_zero_ref_residuals_are_read_only(dtype):
+    """The zero-reference fast path returns a view aliasing the column; a
+    write through it must raise, and the column itself stays writable."""
+    from clj_orc_spark.kernels.base import as_unsigned_residuals, narrow_residuals
+
+    arr = np.arange(10, dtype=dtype)
+    for fn in (as_unsigned_residuals, narrow_residuals):
+        res = fn(arr, 0)
+        with pytest.raises(ValueError, match="read-only"):
+            res[0] = 1
+        assert arr.flags.writeable and arr[0] == 0
+        assert fn(arr, 1).flags.writeable  # the copying path is unchanged

@@ -5,6 +5,7 @@ n_tok-quantile repartition (skew.py) remains the path for ``df=`` inputs and
 row-group-skewed sources — both modes must round-trip bit-identically and
 resume from the same lineage contract."""
 
+import importlib
 import json
 import os
 
@@ -149,6 +150,89 @@ def test_rowgroup_encode_plan_has_zero_shuffles(spark, token_table_dir):
     ).mapInArrow(make_rowgroup_encoder(8 << 20), OUT_DDL)
     assert "Exchange" not in explain_str(encoded, "formatted")
     assert encoded.count() > 0  # and it actually runs
+
+
+def _is_local_scan(df) -> bool:
+    """True iff ``df`` reads driver rows through a JVM ``LocalTableScan``
+    and not a Python RDD (``Scan ExistingRDD``), whose conversion map
+    would cost every task over it an extra Python-worker round."""
+    from clj_orc_spark.plans.explain import explain_str
+
+    plan = explain_str(df, "formatted")
+    return "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_driver_frames_plan_as_local_table_scan(spark, token_table_dir,
+                                                tmp_dir, monkeypatch):
+    """The engine's driver-built frames (the rowgroup work frame, the
+    parts-marker frame of the commit, the decode work frame) are Arrow
+    local relations: no Python task runs before the ``mapInArrow``."""
+    enc = importlib.import_module("clj_orc_spark.pipeline.encode")
+    src = os.path.join(token_table_dir, "tokens.parquet")
+    _, files, _, _ = enc._pyarrow_source(src)
+    plan = enc._rowgroup_plan(files, 4, True)
+    assert _is_local_scan(
+        enc.rowgroup_work_df(spark, plan["parts"], list(range(plan["n_total"])))
+    )
+
+    written = []
+    real_write = enc._write_per_part
+
+    def spy(df, path):
+        written.append((os.path.basename(path), _is_local_scan(df)))
+        real_write(df, path)
+
+    monkeypatch.setattr(enc, "_write_per_part", spy)
+    out = os.path.join(tmp_dir, "enc")
+    encode(spark, src, out, n_partitions=4)
+    assert ("parts", True) in written
+    assert all(local for name, local in written if name == "parts")
+    assert _is_local_scan(decode(spark, out))
+    assert _is_local_scan(decode(spark, out, columns=["n_tok"],
+                                 n_tok_range=(10, 20)))
+
+
+def _no_python_rdd(df) -> bool:
+    """True iff producing ``df``'s rows runs no Python task."""
+    return "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+@pytest.mark.parametrize("threshold", [None, "0"],
+                         ids=["local_relation", "above_threshold"])
+def test_more_parts_than_cores_decodes_bit_identical(spark, token_table_dir,
+                                                     tmp_dir, threshold):
+    """Past ``defaultParallelism`` rows a driver frame gives each task a
+    contiguous run of parts (8 parts on 4 cores): encode and decode must
+    still cover every part exactly once, bit-identically.  A frame above
+    ``localRelationThreshold`` (every frame, at 0) is read as a JVM RDD of
+    Arrow batches instead of a ``LocalTableScan`` and must keep the same
+    task count and the same runs."""
+    from clj_orc_spark.pipeline.encode import rowgroup_work_df
+
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    if threshold is not None:
+        spark.conf.set(key, threshold)
+    try:
+        n_cores = spark.sparkContext.defaultParallelism
+        src = os.path.join(token_table_dir, "tokens.parquet")
+        out = os.path.join(tmp_dir, "enc")
+        encode(spark, src, out, n_partitions=8)
+        plan = _plan(out)
+        assert plan["n_total"] == 8
+        work = rowgroup_work_df(spark, plan["parts"], list(range(8)))
+        assert _no_python_rdd(work)
+        assert _is_local_scan(work) == (threshold is None)
+        runs = work.rdd.glom().map(lambda rows: [r.pid for r in rows]).collect()
+        assert len(runs) == n_cores < 8
+        # contiguous, in order, the same cut on both paths
+        assert runs == [list(range(i * 8 // n_cores, (i + 1) * 8 // n_cores))
+                        for i in range(n_cores)]
+        dec = decode(spark, out)
+        assert dec.rdd.getNumPartitions() == n_cores
+        v = verify_roundtrip(spark.read.parquet(src), dec)
+        assert v["bit_identical"] and v["total"] == 5_000
+    finally:
+        spark.conf.unset(key)
 
 
 def test_rowgroup_plan_reused_on_resume(spark, token_table_dir, tmp_dir):
